@@ -2,58 +2,20 @@
 
 Reimplements, batch-vectorized, the reference's geometry semantics:
 
-* bbox fold over all parts/rings   — ``src/shapefile/geometry.cpp:29-76``
 * ray-cast even-odd point-in-ring  — ``src/shapefile/geometry.cpp:87-103``
 * polygon contains = inside ring 0 (shell) AND inside no later ring (hole);
   ring role is positional, winding ignored — ``geometry.cpp:106-118``
-* closed-interval bbox contains    — ``geometry.cpp:9-12``
-* bbox intersects (touching edges count) — ``geometry.cpp:14-17``
-* Euclidean-on-degrees distance    — ``src/geocoding/geocoder.cpp:463-468``
+  (``polygon_contains_points``)
 
 Geometry wire format used everywhere in the engine (never a Python object
 per row): flattened vertex arrays + ring-size offsets —
 ``xs: array<double>, ys: array<double>, ring_sizes: array<int>`` — which map
 1:1 onto Arrow ListArrays, so pandas_udf batches see contiguous buffers.
-
-The PIP kernel is the *refine* phase of the cell-join (coarse phase =
-cell equi-join planned by Catalyst); it vectorizes across the whole Arrow
-batch: one flat edge table for all (point, polygon) candidate rows, one
-``np.add.reduceat``-free bincount per ring — no per-row Python loops.
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-
-# ---------------------------------------------------------------------------
-# bbox predicates / folds (column-expression analogues live in operators/)
-# ---------------------------------------------------------------------------
-
-def bbox_of_rings(xs: list[np.ndarray], ys: list[np.ndarray]) -> tuple[float, float, float, float]:
-    """Min/max fold over every vertex of every ring (geometry.cpp:56-76)."""
-    ax = np.concatenate([np.asarray(a, np.float64) for a in xs]) if xs else np.empty(0)
-    ay = np.concatenate([np.asarray(a, np.float64) for a in ys]) if ys else np.empty(0)
-    if ax.size == 0:
-        return (0.0, 0.0, 0.0, 0.0)
-    return (float(ax.min()), float(ay.min()), float(ax.max()), float(ay.max()))
-
-
-def bbox_contains(minx, miny, maxx, maxy, px, py) -> np.ndarray:
-    """Closed-interval containment (geometry.cpp:9-12), vectorized."""
-    return (px >= minx) & (px <= maxx) & (py >= miny) & (py <= maxy)
-
-
-def bbox_intersects(aminx, aminy, amaxx, amaxy, bminx, bminy, bmaxx, bmaxy) -> np.ndarray:
-    """Negated-disjoint test (geometry.cpp:14-17): touching edges intersect."""
-    return ~((bminx > amaxx) | (bmaxx < aminx) | (bminy > amaxy) | (bmaxy < aminy))
-
-
-def euclid_degrees(x1, y1, x2, y2) -> np.ndarray:
-    """Reference distance: Euclidean on raw degrees (geocoder.cpp:463-468)."""
-    dx = np.asarray(x1, np.float64) - np.asarray(x2, np.float64)
-    dy = np.asarray(y1, np.float64) - np.asarray(y2, np.float64)
-    return np.sqrt(dx * dx + dy * dy)
 
 
 # ---------------------------------------------------------------------------
@@ -70,73 +32,6 @@ def _ring_crossings(px_e, py_e, x1, y1, x2, y2) -> np.ndarray:
     with np.errstate(divide="ignore", invalid="ignore"):
         xint = (x2 - x1) * (py_e - y1) / (y2 - y1) + x1
     return straddles & (px_e < xint)
-
-
-def points_in_rings(
-    px: np.ndarray,
-    py: np.ndarray,
-    flat_xs: np.ndarray,
-    flat_ys: np.ndarray,
-    ring_sizes: np.ndarray,
-    ring_row: np.ndarray,
-    ring_is_shell: np.ndarray,
-) -> np.ndarray:
-    """Batch PIP over heterogeneous candidate rows.
-
-    Inputs describe R rows (point, polygon candidate) whose rings were
-    flattened into one global vertex buffer:
-
-    * ``px, py``          — (R,) point coords per row
-    * ``flat_xs/flat_ys`` — all vertices of all rings of all rows, concat'd
-    * ``ring_sizes``      — (G,) vertex count per ring (global ring order)
-    * ``ring_row``        — (G,) owning row index of each ring
-    * ``ring_is_shell``   — (G,) True for ring 0 of its row (positional role)
-
-    Returns (R,) bool: inside shell AND inside no hole (geometry.cpp:106-118).
-    """
-    R = px.shape[0]
-    G = ring_sizes.shape[0]
-    if G == 0 or flat_xs.size == 0:
-        return np.zeros(R, dtype=bool)
-
-    ring_sizes = ring_sizes.astype(np.int64)
-    starts = np.zeros(G, dtype=np.int64)
-    np.cumsum(ring_sizes[:-1], out=starts[1:])
-
-    # Edge i of a ring connects vertex i (pi) to the previous vertex (pj),
-    # wrapping so vertex 0 pairs with the last — mirrors j=size-1 init at
-    # geometry.cpp:89-101. One edge per vertex.
-    n_vert = int(flat_xs.size)
-    vert_ring = np.repeat(np.arange(G, dtype=np.int64), ring_sizes)
-
-    prev_idx = np.arange(n_vert, dtype=np.int64) - 1
-    ring_last = starts + ring_sizes - 1
-    prev_idx[starts] = ring_last  # wrap within each ring
-
-    x1, y1 = flat_xs, flat_ys                      # pi
-    x2, y2 = flat_xs[prev_idx], flat_ys[prev_idx]  # pj
-
-    edge_row = ring_row[vert_ring]
-    crossings = _ring_crossings(px[edge_row], py[edge_row], x1, y1, x2, y2)
-
-    # odd number of crossings per ring => inside that ring
-    ring_cross = np.bincount(vert_ring, weights=crossings, minlength=G)
-    inside_ring = (ring_cross.astype(np.int64) & 1).astype(bool)
-
-    in_shell = np.zeros(R, dtype=bool)
-    shell_rows = ring_row[ring_is_shell]
-    # a row has exactly one shell (ring 0); scatter is safe
-    in_shell[shell_rows] = inside_ring[ring_is_shell]
-
-    in_hole = np.zeros(R, dtype=bool)
-    hole_mask = ~ring_is_shell
-    if hole_mask.any():
-        hole_hits = np.bincount(
-            ring_row[hole_mask], weights=inside_ring[hole_mask], minlength=R
-        )
-        in_hole = hole_hits > 0
-
-    return in_shell & ~in_hole
 
 
 def polygon_contains_points(

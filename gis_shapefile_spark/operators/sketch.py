@@ -293,7 +293,9 @@ def bloom_contains(
     rate — the caller's exact verify join runs only on the passers."""
     h = TA.hash60_sql(item_col, "spark")
     bits = ", ".join(bloom_bit_sql(h, j, m) for j in range(k))
-    ex = probes.selectExpr(
+    # one hit count per DISTINCT value: a duplicated probe would add up
+    # to 2k hits and fail the == k test (a false negative)
+    ex = probes.select(item_col).distinct().selectExpr(
         item_col, f"explode(array({bits})) AS bit"
     )
     hits = (

@@ -55,25 +55,6 @@ def _rings_of_row(row) -> tuple[list[np.ndarray], list[np.ndarray]]:
     return rx, ry
 
 
-def _cell_fully_inside(rx, ry, cminx, cminy, cmaxx, cmaxy) -> bool:
-    """Conservative FULL test: 4 corners inside AND no ring edge crosses the
-    cell bbox. Sound because a boundary entering the cell implies an edge
-    whose own bbox intersects the cell bbox."""
-    corners_x = np.array([cminx, cmaxx, cmaxx, cminx])
-    corners_y = np.array([cminy, cminy, cmaxy, cmaxy])
-    if not G.polygon_contains_points(rx, ry, corners_x, corners_y).all():
-        return False
-    for x, y in zip(rx, ry):
-        ex0 = np.minimum(x, np.roll(x, 1))
-        ex1 = np.maximum(x, np.roll(x, 1))
-        ey0 = np.minimum(y, np.roll(y, 1))
-        ey1 = np.maximum(y, np.roll(y, 1))
-        hit = (ex0 <= cmaxx) & (ex1 >= cminx) & (ey0 <= cmaxy) & (ey1 >= cminy)
-        if hit.any():
-            return False
-    return True
-
-
 def prepare_polygon_cells(
     features_pdf: pd.DataFrame, res: int = DEFAULT_RES
 ) -> pd.DataFrame:
@@ -331,18 +312,6 @@ def pip_matches_stateless(
         F.broadcast(dim), pts["__cell"] == dim["cell"], "inner"
     ).drop("cell")
     return _split_refine(joined, index.rings_bc, lng_col, lat_col)
-
-
-def _pip_refine(
-    spark: SparkSession,
-    candidates: DataFrame,
-    features_pdf: pd.DataFrame,
-    lng_col: str,
-    lat_col: str,
-) -> DataFrame:
-    return _pip_refine_bc(
-        candidates, rings_broadcast(spark, features_pdf), lng_col, lat_col
-    )
 
 
 def _pip_refine_bc(

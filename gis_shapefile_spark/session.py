@@ -67,12 +67,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addPyFile(_package_zip())
     return spark
-
-
-def stop_spark() -> None:
-    """Stop the active session (used by the two-parallelism bench)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    # Spark keeps the JVM-side default session; clear so a new master takes.
-    SparkSession.builder._options = {}

@@ -4,17 +4,11 @@
 Contact discovery (convoy detection, contact tracing, co-shooting
 camera pairs) cannot be a nightly rebuild at 10^12 pings — fixes arrive
 continuously and each micro-batch touches a handful of TIME BUCKETS
-(new pings are temporally localized by construction). This sink
-composes the same three layers as ``tiles_stream.py``:
-
-* Structured Streaming replay guarantees (stream checkpoint);
-* the churn-bounded fold: a batch re-pairs ONLY its touched buckets —
-  the committed pair table for untouched buckets is carried over
-  verbatim, so per-batch work is O(batch buckets' population), never an
-  all-time rescan;
-* fingerprint-keyed manifest commits on the checkpoint table —
-  exactly-once at the manifest level: a replayed batch short-circuits
-  instead of double-merging its fixes.
+(new pings are temporally localized by construction). The fold is
+churn-bounded: a batch re-pairs ONLY its touched buckets — the committed
+pair table for untouched buckets is carried over verbatim, so per-batch
+work is O(batch buckets' population), never an all-time rescan. Both
+stages commit through the manifest protocol in ``sink.py``.
 
 State is two staged tables: ``<stage>_reps`` (the first fix per
 (device, bucket) ACROSS batches — merged by a (ts, event_id) window
@@ -30,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from . import sink
 
 
 def _bucket_expr(bucket_s: int) -> str:
@@ -61,8 +57,7 @@ def streaming_contact_sink(
     reps_stage = f"{stage_name}_reps"
     pairs_stage = f"{stage_name}_pairs"
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy("point_id", "bucket").orderBy("_ts", "_ev")
+    def apply_batch(batch_df: DataFrame, batch_id: int, lineage: str) -> None:
         batch_reps = (
             batch_df.withColumn("__ep", F.unix_timestamp(F.col(ts_col)))
             .withColumn("bucket", F.expr(_bucket_expr(bucket_s)))
@@ -72,42 +67,37 @@ def streaming_contact_sink(
                 F.col(ts_col).alias("_ts"), F.col(id_col).alias("_ev"),
             )
         )
-        try:
-            committed = table.read_stage(reps_stage)
-        except KeyError:
-            committed = batch_reps.limit(0)
-        merged = (
-            committed.unionByName(batch_reps)
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-            .localCheckpoint(eager=True)
-        )
-        touched = batch_reps.select("bucket").distinct()
-        cand = merged.join(F.broadcast(touched), "bucket").select(
-            "point_id", "bucket", "lng", "lat"
-        )
-        new_pairs = SJ.within_distance_self_join(
-            cand, distance=distance, key_cols=("bucket",)
-        )
-        try:
-            old_pairs = table.read_stage(pairs_stage)
-            kept = old_pairs.join(F.broadcast(touched), "bucket", "left_anti")
-        except KeyError:
-            kept = new_pairs.limit(0)
-        updated_pairs = kept.unionByName(new_pairs)
-        fp = f"ck={checkpoint_dir}|batch:{batch_id}"
-        table.stage(reps_stage, fp, lambda: merged)
-        table.stage(pairs_stage, fp, lambda: updated_pairs)
+        touched = F.broadcast(batch_reps.select("bucket").distinct())
 
-    q = (
-        events_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+        def fold_reps(committed: DataFrame | None) -> DataFrame:
+            w = Window.partitionBy("point_id", "bucket").orderBy("_ts", "_ev")
+            both = batch_reps if committed is None else committed.unionByName(batch_reps)
+            return (
+                both.withColumn("__rn", F.row_number().over(w))
+                .where(F.col("__rn") == 1)
+                .drop("__rn")
+            )
+
+        # the pairs fold reads the COMMITTED reps, so a replay killed
+        # between the two commits re-pairs from the same representatives
+        reps = sink.fold_commit(table, reps_stage, lineage, batch_id, fold_reps)
+
+        def fold_pairs(committed: DataFrame | None) -> DataFrame:
+            cand = reps.join(touched, "bucket").select(
+                "point_id", "bucket", "lng", "lat"
+            )
+            new_pairs = SJ.within_distance_self_join(
+                cand, distance=distance, key_cols=("bucket",)
+            )
+            if committed is None:
+                return new_pairs
+            return committed.join(touched, "bucket", "left_anti").unionByName(
+                new_pairs
+            )
+
+        sink.fold_commit(table, pairs_stage, lineage, batch_id, fold_pairs)
+
+    return sink.run(events_stream, checkpoint_dir, apply_batch)
 
 
 def contact_rollup(table, stage_name: str, min_buckets: int) -> DataFrame:

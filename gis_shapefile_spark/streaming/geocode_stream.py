@@ -18,10 +18,8 @@ over a Structured Streaming source, two ways:
   ``foreachBatch``: each micro-batch runs the full batch operator
   (including the deterministic ``min(record_number)`` tie-break, which
   needs a per-point window and so cannot run stateless inside the
-  stream), writing one parquet subdirectory per micro-batch id with
-  overwrite semantics. Re-running a failed batch overwrites its own
-  directory — idempotent, so checkpoint + restart gives exactly-once
-  output without a transactional sink.
+  stream), writing one parquet subdirectory or one manifest stage per
+  micro-batch (exactly-once protocol: ``sink.py``).
 
 Correctness oracle (tests/test_streaming_geocode.py): replaying the whole
 input through the stream must produce exactly the batch join's row set,
@@ -30,12 +28,10 @@ and restarting from checkpoint must process only unseen files.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators import spatial_join as SJ
+from . import sink
 
 POINTS_SCHEMA = "point_id long, lng double, lat double"
 
@@ -81,49 +77,33 @@ def streaming_geocode_to_parquet(
     table=None,
 ):
     """Sink path: per-micro-batch full geocode (tie-break included) written
-    to ``out_dir/batch_id=N/``, exactly-once via idempotent overwrite +
-    stream checkpoint. Returns the (terminated) StreamingQuery.
+    to ``out_dir/batch_id=N/`` with overwrite, so a replayed batch rewrites
+    its own directory. Returns the (terminated) StreamingQuery.
 
     Pass a ``plans.checkpoint.CheckpointTable`` as ``table`` to commit each
-    micro-batch as a manifest stage instead: the batch then carries
-    per-partition lineage + row/byte metrics like every batch pipeline
-    stage, and a replayed batch (failure between sink write and stream
-    commit) short-circuits on its fingerprint — manifest-level
-    exactly-once on top of the stream checkpoint."""
+    micro-batch as its own manifest stage ``geocode_batch_<lineage>_<N>``
+    instead, with per-partition lineage + row/byte metrics; the lineage
+    in the name keeps two streams sharing one table apart. Exactly-once
+    protocol: ``streaming/sink.py``."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        matched = SJ.point_in_polygon_join(
-            spark, batch_df, index,
-            point_id_col=point_id_col, attrs=attrs,
-        )
-        if table is not None:
-            # fingerprint scoped by the STREAM checkpoint: within one
-            # checkpoint lineage, batch N always holds the same rows
-            # (exactly-once replay), so the short-circuit is safe; a fresh
-            # stream checkpoint gets fresh fingerprints and recomputes.
-            # The stage NAME also embeds a checkpoint-dir hash — two
-            # streams sharing one CheckpointTable would otherwise collide
-            # on `geocode_batch_N` and keep superseding each other's
-            # manifest entry (stage() keys the manifest by name).
-            ck = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:8]
-            table.stage(
-                f"geocode_batch_{ck}_{batch_id}",
-                f"ck={checkpoint_dir}|batch:{batch_id}",
-                lambda: matched,
+    def apply_batch(batch_df: DataFrame, batch_id: int, lineage: str) -> None:
+        def geocode(_committed=None) -> DataFrame:
+            return SJ.point_in_polygon_join(
+                spark, batch_df, index,
+                point_id_col=point_id_col, attrs=attrs,
             )
-        else:
-            matched.write.mode("overwrite").parquet(
+
+        if table is None:
+            geocode().write.mode("overwrite").parquet(
                 f"{out_dir}/batch_id={batch_id}"
             )
+        else:
+            sink.fold_commit(
+                table, f"geocode_batch_{lineage}_{batch_id}",
+                lineage, batch_id, geocode,
+            )
 
-    q = (
-        points_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return sink.run(points_stream, checkpoint_dir, apply_batch)
 
 
 def streaming_geofence_matches(

@@ -13,10 +13,10 @@ the raw parquet append lacks:
   no per-row Python);
 * the batch lands in the index root as its OWN partition directory
   ``batch=<id>/bucket=<b>/`` via write-to-tmp + atomic rename, so a
-  replayed batch (stream-checkpoint recovery re-delivers the last
-  uncommitted batch) short-circuits on the existing directory instead of
-  double-inserting its vectors — the rename IS the commit marker, the
-  same copy-on-write shape as ``plans/checkpoint.py``;
+  replayed batch short-circuits on the existing directory instead of
+  double-inserting its vectors — the rename IS the commit marker. The
+  key is the bare batch id, not the lineage (``sink.py``): a fresh
+  checkpoint over the same feed must not insert the same rows twice;
 * queries keep using ``ivf_topk_indexed`` unchanged: partition discovery
   surfaces ``batch`` and ``bucket`` as columns and the probe set's
   bucket filter prunes at the second partition level, so a query still
@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import _with_norm, ivf_assign_batch
+from . import sink
 
 
 def streaming_ivf_sink(
@@ -63,7 +64,7 @@ def streaming_ivf_sink(
     """
     os.makedirs(index_root, exist_ok=True)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def apply_batch(batch_df: DataFrame, batch_id: int, _lineage: str) -> None:
         final = os.path.join(index_root, f"batch={batch_id}")
         if os.path.exists(final):
             return  # replayed batch: already committed, exactly-once
@@ -82,11 +83,4 @@ def streaming_ivf_sink(
         ).parquet(tmp)
         os.rename(tmp, final)  # atomic commit
 
-    q = (
-        embeddings_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return sink.run(embeddings_stream, checkpoint_dir, apply_batch)

@@ -2,12 +2,10 @@
 checkpoint-table stage per micro-batch.
 
 The 10^12-row image table is not append-only — recrawls upsert by
-image_id, takedowns tombstone it. This sink composes the three layers
-already in the engine: Structured Streaming's replay guarantees (stream
-checkpoint), ``plans/merge.py::merge_upsert`` (the one-shuffle MERGE),
-and the checkpoint table's fingerprint-keyed manifest commits
-(exactly-once at the manifest level: a replayed batch short-circuits on
-its fingerprint instead of double-applying).
+image_id, takedowns tombstone it. Each batch goes through
+``plans/merge.py::merge_upsert`` (the one-shuffle MERGE) and commits
+through the manifest protocol in ``sink.py``, so a replayed batch is
+never applied twice.
 
 Scale shape per batch: read the current committed snapshot (parquet
 scan), one keyed window shuffle against the batch (batch-sized, tiny
@@ -19,11 +17,11 @@ apart; for second-scale batches compact less often and let
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans import merge as MG
+from . import sink
 
 
 def streaming_merge_sink(
@@ -49,48 +47,31 @@ def streaming_merge_sink(
     Single-writer: the sink commits under ``stage_name`` itself, so one
     CheckpointTable stage belongs to ONE stream (same contract as
     ``vacuum``); restarting with a fresh stream checkpoint continues the
-    existing snapshot.
-
-    Exactly-once: the stage fingerprint embeds (stream checkpoint, batch
-    id). Within one checkpoint lineage batch N replays with identical
-    rows, so a retry after a failure between snapshot write and stream
-    commit finds the fingerprint already committed and skips the
-    re-apply — no double-merge. Returns the (terminated) StreamingQuery.
+    existing snapshot. Returns the (terminated) StreamingQuery.
     """
-    name = stage_name
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if order_col is not None:
-            tie = [
-                F.col(c).desc()
-                for c in sorted(batch_df.columns)
-                if c != order_col and c not in key_cols
-            ]
-            w = Window.partitionBy(*key_cols).orderBy(
-                F.col(order_col).desc(), *tie
-            )
-            batch_df = (
-                batch_df.withColumn("__mrn", F.row_number().over(w))
-                .where(F.col("__mrn") == 1)
-                .drop("__mrn")
-            )
-        try:
-            current = table.read_stage(name)
-        except KeyError:
-            cols = [c for c in batch_df.columns if c != delete_col]
-            current = spark.createDataFrame([], batch_df.select(*cols).schema)
-        merged = MG.merge_upsert(current, batch_df, key_cols, delete_col=delete_col)
-        table.stage(
-            name,
-            f"ck={checkpoint_dir}|batch:{batch_id}",
-            lambda: merged,
-        )
+    def apply_batch(batch_df: DataFrame, batch_id: int, lineage: str) -> None:
+        def fold(current: DataFrame | None) -> DataFrame:
+            updates = batch_df
+            if order_col is not None:
+                tie = [
+                    F.col(c).desc()
+                    for c in sorted(batch_df.columns)
+                    if c != order_col and c not in key_cols
+                ]
+                w = Window.partitionBy(*key_cols).orderBy(
+                    F.col(order_col).desc(), *tie
+                )
+                updates = (
+                    batch_df.withColumn("__mrn", F.row_number().over(w))
+                    .where(F.col("__mrn") == 1)
+                    .drop("__mrn")
+                )
+            if current is None:
+                cols = [c for c in batch_df.columns if c != delete_col]
+                current = spark.createDataFrame([], batch_df.select(*cols).schema)
+            return MG.merge_upsert(current, updates, key_cols, delete_col=delete_col)
 
-    q = (
-        updates_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+        sink.fold_commit(table, stage_name, lineage, batch_id, fold)
+
+    return sink.run(updates_stream, checkpoint_dir, apply_batch)

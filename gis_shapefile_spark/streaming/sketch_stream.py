@@ -1,5 +1,5 @@
-"""Continuous count-min sketch maintenance: the streaming member of
-``operators/sketch.py``.
+"""Continuous count-min sketch and HyperLogLog maintenance: the
+streaming members of ``operators/sketch.py``.
 
 The sketch IS the streaming-native structure: each micro-batch sketches
 independently (``cms_build`` — map-side, d x w bounded) and folds into
@@ -7,9 +7,9 @@ the committed grid with pure integer adds (``cms_merge``), so the
 running state is a CONSTANT 256 rows no matter how many tokens have
 streamed past — the exact property that makes frequency tracking
 feasible over an unbounded 10^12-token feed where a true counter table
-would grow with the vocabulary. Exactly-once at the manifest level via
-the fingerprint-keyed checkpoint-table commit, same as every sink here;
-a replayed batch short-circuits instead of double-adding its counts.
+would grow with the vocabulary. Each fold commits through the manifest
+protocol in ``sink.py``, so a replayed batch never double-adds its
+counts.
 
 Estimates read back at ANY time with ``cms_estimate`` against the
 committed stage — and because merge is associative + commutative
@@ -22,6 +22,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import sketch as SK
+from . import sink
+
+
+def _fold_sink(items_stream, table, stage_name, checkpoint_dir, build, merge):
+    """Commit ``merge(committed, build(batch))`` per micro-batch."""
+
+    def apply_batch(batch_df: DataFrame, batch_id: int, lineage: str) -> None:
+        def fold(committed: DataFrame | None) -> DataFrame:
+            batch = build(batch_df)
+            return batch if committed is None else merge(committed, batch)
+
+        sink.fold_commit(table, stage_name, lineage, batch_id, fold)
+
+    return sink.run(items_stream, checkpoint_dir, apply_batch)
 
 
 def streaming_cms_sink(
@@ -37,28 +51,10 @@ def streaming_cms_sink(
     """Fold each micro-batch's sketch into the committed ``stage_name``
     counter grid of ``table`` (a ``CheckpointTable``). Single-writer per
     stage. Returns the (terminated) StreamingQuery."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_sk = SK.cms_build(batch_df, item_col, d=d, w=w)
-        try:
-            committed = table.read_stage(stage_name)
-            updated = SK.cms_merge(committed, batch_sk)
-        except KeyError:
-            updated = batch_sk
-        table.stage(
-            stage_name,
-            f"ck={checkpoint_dir}|batch:{batch_id}",
-            lambda: updated,
-        )
-
-    q = (
-        items_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_sink(
+        items_stream, table, stage_name, checkpoint_dir,
+        lambda df: SK.cms_build(df, item_col, d=d, w=w), SK.cms_merge,
     )
-    q.awaitTermination()
-    return q
 
 
 def streaming_hll_sink(
@@ -75,30 +71,11 @@ def streaming_hll_sink(
     |groups| x 64 bounded) and folds into the committed grid by
     elementwise integer MAX (``hll_merge``). Max is associative,
     commutative, AND idempotent — re-merging a replayed batch cannot
-    move a register even without the manifest short-circuit, which
-    makes this the most replay-tolerant state in the engine; the
-    fingerprint commit still skips the work. The streamed grid equals
-    the batch grid of the full feed bit-for-bit (pytest-pinned)."""
-    from ..operators import sketch as SK
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_grid = SK.hll_build(batch_df, item_col, group_cols=group_cols)
-        try:
-            committed = table.read_stage(stage_name)
-            updated = SK.hll_merge(committed, batch_grid)
-        except KeyError:
-            updated = batch_grid
-        table.stage(
-            stage_name,
-            f"ck={checkpoint_dir}|batch:{batch_id}",
-            lambda: updated,
-        )
-
-    q = (
-        items_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    move a register even without the manifest short-circuit. The
+    streamed grid equals the batch grid of the full feed bit-for-bit
+    (pytest-pinned)."""
+    return _fold_sink(
+        items_stream, table, stage_name, checkpoint_dir,
+        lambda df: SK.hll_build(df, item_col, group_cols=group_cols),
+        SK.hll_merge,
     )
-    q.awaitTermination()
-    return q

@@ -3,17 +3,11 @@ folds into the committed multi-resolution pyramid per micro-batch.
 
 The north rule's tile materialization cannot be a nightly rebuild at
 10^12 images — crawl batches arrive continuously and each one touches a
-handful of tiles (new imagery is spatially localized). This sink
-composes three existing layers, the same shape as
-``streaming/merge_stream.py``:
-
-* Structured Streaming's replay guarantees (stream checkpoint);
-* ``operators/tiling.py::tile_pyramid_delta`` — the churn-bounded fold:
-  O(batch) work, never a corpus rescan (count/min/max associativity);
-* the checkpoint table's fingerprint-keyed manifest commits —
-  exactly-once at the manifest level: a replayed batch short-circuits
-  on its (stream checkpoint, batch id) fingerprint instead of
-  double-counting its points into the tiles.
+handful of tiles (new imagery is spatially localized). This sink folds
+each batch with ``operators/tiling.py::tile_pyramid_delta`` — the
+churn-bounded fold: O(batch) work, never a corpus rescan (count/min/max
+associativity) — and commits it through the manifest protocol in
+``sink.py``, so a replayed batch never double-counts its points.
 
 Scale shape per batch: batch pyramid (batch-scale), semi-join against
 the committed pyramid (tile-universe-bounded, partition-pruned when the
@@ -29,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import tiling as TI
 from ..plans import merge as MG
+from . import sink
 
 
 def streaming_pyramid_sink(
@@ -50,29 +45,17 @@ def streaming_pyramid_sink(
     StreamingQuery.
     """
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            current = table.read_stage(stage_name)
-        except KeyError:
-            # first batch: an empty frame with the pyramid schema
-            current = TI.tile_pyramid(
-                batch_df.limit(0), resolutions, lng_col, lat_col
+    def apply_batch(batch_df: DataFrame, batch_id: int, lineage: str) -> None:
+        def fold(current: DataFrame | None) -> DataFrame:
+            if current is None:  # first batch: empty pyramid schema
+                current = TI.tile_pyramid(
+                    batch_df.limit(0), resolutions, lng_col, lat_col
+                )
+            delta = TI.tile_pyramid_delta(
+                current, batch_df, resolutions, lng_col, lat_col
             )
-        delta = TI.tile_pyramid_delta(
-            current, batch_df, resolutions, lng_col, lat_col
-        )
-        updated = MG.merge_upsert(current, delta, ["res", "cell"])
-        table.stage(
-            stage_name,
-            f"ck={checkpoint_dir}|batch:{batch_id}",
-            lambda: updated,
-        )
+            return MG.merge_upsert(current, delta, ["res", "cell"])
 
-    q = (
-        points_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+        sink.fold_commit(table, stage_name, lineage, batch_id, fold)
+
+    return sink.run(points_stream, checkpoint_dir, apply_batch)

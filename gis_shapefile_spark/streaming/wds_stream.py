@@ -9,22 +9,18 @@ duplicated shard silently doubles those samples' epoch frequency).
 Composition: ``sources/webdataset.write_shards`` already writes one tar
 per partition with atomic tmp+rename publish and byte-identical
 re-writes; this sink namespaces each micro-batch's shards with a
-``shard-b<batch id>-<checkpoint identity>`` prefix and short-circuits
-when that batch's shards already exist — the same marker-dir
-exactly-once pattern as the takedown and IVF-index sinks (rename IS the
-commit; a crash between publish and stream-commit replays into a no-op
-because the rewrite is byte-identical anyway).
+``shard-b<batch id>-<lineage>`` prefix and short-circuits when that
+batch's shards already exist (protocol and lineage key: ``sink.py``).
 
 Readers see a growing pool of shards: ``read_shards_df(out_dir,
 prefix="shard")`` matches every batch's shards at once (the batch tag
 extends the same prefix), so the consumer contract is unchanged.
 
-``out_dir`` is PAIRED with its checkpoint: the shard tag embeds the
-checkpoint's persisted query id, so a wiped-and-recreated checkpoint
-re-exports the whole feed under a new identity (duplicate shards) rather
-than silently DROPPING the new lineage's batch-0 samples on the old
-markers — for an export sink, detectable duplication beats silent loss;
-start a fresh out_dir whenever you start a fresh checkpoint.
+``out_dir`` is PAIRED with its checkpoint: a wiped-and-recreated
+checkpoint re-exports the whole feed under a new lineage (duplicate
+shards) rather than silently DROPPING the new lineage's batch-0 samples
+on the old markers — for an export sink, detectable duplication beats
+silent loss; start a fresh out_dir whenever you start a fresh checkpoint.
 """
 
 from __future__ import annotations
@@ -32,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import webdataset as W
-from .takedown_stream import _checkpoint_identity
+from . import sink
 
 
 def streaming_wds_sink(
@@ -46,18 +42,10 @@ def streaming_wds_sink(
     (availableNow trigger — one call drains the feed's current files).
     """
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        ck = _checkpoint_identity(checkpoint_dir)
-        prefix = f"shard-b{batch_id:06d}-{ck}"
+    def apply_batch(batch_df: DataFrame, batch_id: int, lineage: str) -> None:
+        prefix = f"shard-b{batch_id:06d}-{lineage}"
         if W.list_shards(out_dir, prefix):
             return  # replayed batch: its shards are already published
         W.write_shards(batch_df, out_dir, prefix=prefix).collect()
 
-    q = (
-        images_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return sink.run(images_stream, checkpoint_dir, apply_batch)

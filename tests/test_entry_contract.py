@@ -20,7 +20,7 @@ import pandas as pd
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as E  # noqa: E402
-from tools.check_correctness import canon, dtype_mismatches  # noqa: E402
+from tools.check_correctness import canon, dtype_mismatches, parse_args  # noqa: E402
 
 # Driver-green ledger, read from the checked-in artifacts themselves: a
 # query is "driver-green" if any CORRECTNESS_r*.json records rows +
@@ -200,3 +200,19 @@ def test_canon_allows_nullable_int_promotion():
     _, _, _, kla = canon(a)
     _, _, _, klb = canon(b)
     assert dtype_mismatches(kla, klb) == []
+
+
+def test_check_correctness_first_arg_may_be_a_query(tmp_path):
+    """``check_correctness.py pip_grid_join`` checks that query at the
+    default scale; it must not take the query name for the sf_dir."""
+    import pytest
+
+    no_arrow, sf_dir, only = parse_args(["pip_grid_join"])
+    assert (no_arrow, only) == (False, {"pip_grid_join"})
+    assert sf_dir.endswith("sf0.01")
+    d = str(tmp_path)
+    assert parse_args(["--no-arrow", d, "pip_grid_join", "zonal_stats"]) == (
+        True, d, {"pip_grid_join", "zonal_stats"})
+    assert parse_args([d]) == (False, d, set())
+    with pytest.raises(SystemExit, match="no_such_query"):
+        parse_args(["no_such_query"])

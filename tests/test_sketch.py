@@ -238,6 +238,23 @@ def test_bloom_no_false_negatives_and_twin_bits(spark):
     assert len(fps) < len(others) * 0.2               # small-m honest bound
 
 
+def test_bloom_duplicate_probes_keep_membership(spark):
+    """A member probed by several rows still passes: hits count once per
+    distinct probe value (duplicates used to add up to 2k hits, which
+    reads as "definitely not"), and a member whose own k bits collide
+    still counts k hits (a distinct-bit count would drop it)."""
+    collider = next(
+        v for v in (f"c{i}" for i in range(10_000))
+        if len(set(_bloom_bits(v))) < SK.BLOOM_K
+    )
+    members = [f"ban{i}" for i in range(20)] + [collider]
+    bloom = SK.bloom_build(_tok_df(spark, members), "token")
+    probes = members + members[:5] + [collider, "ok0", "ok1"]
+    tagged = SK.bloom_contains(_tok_df(spark, probes), bloom, "token").collect()
+    assert len(tagged) == len(probes)  # one output row per probe row
+    assert all(r.in_bloom == 1 for r in tagged if r.token in members)
+
+
 def test_bloom_union_merge_is_set_or(spark):
     a = [f"x{i}" for i in range(30)]
     b = [f"y{i}" for i in range(30)]

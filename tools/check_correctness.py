@@ -171,11 +171,24 @@ def check_queries(spark, con, sf_dir: str, only=None, verbose=True) -> list[str]
     return failures
 
 
-def main() -> int:
-    argv = [a for a in sys.argv[1:] if a != "--no-arrow"]
-    no_arrow = "--no-arrow" in sys.argv[1:]
+def parse_args(cli: list[str]) -> tuple[bool, str, set[str]]:
+    """``(no_arrow, sf_dir, only)`` from the command line. ``sf_dir`` is
+    optional: a first positional argument that is not a directory is a
+    query name (``check_correctness.py pip_grid_join`` checks that query
+    at sf0.01). Unknown query names are an error, never an empty run."""
+    no_arrow = "--no-arrow" in cli
+    args = [a for a in cli if a != "--no-arrow"]
+    argv = args[:1] if args and os.path.isdir(args[0]) else []  # the sf_dir
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    only = set(argv[1:])
+    only = set(args[len(argv):])
+    unknown = sorted(only - set(E.queries()))
+    if unknown:
+        raise SystemExit(f"not a directory or a query name: {unknown}")
+    return no_arrow, sf_dir, only
+
+
+def main() -> int:
+    no_arrow, sf_dir, only = parse_args(sys.argv[1:])
     conf = {"spark.driver.memory": "8g",
             "spark.ui.showConsoleProgress": "false"}
     if no_arrow:
