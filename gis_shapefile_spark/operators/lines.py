@@ -32,6 +32,8 @@ never lose the true nearest-within-radius.
 
 from __future__ import annotations
 
+import numbers
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -692,6 +694,17 @@ def _interp_xy_u_sql(a: str, b: str, target: str, cum0: str,
     )
 
 
+def _percents(fracs: tuple[int, ...]) -> list[int]:
+    """``fracs`` as distinct integer percents in (0, 100]; a float such as
+    50.5 is rejected, never truncated."""
+    if not fracs or any(isinstance(p, bool) or not isinstance(p, numbers.Integral)
+                        or not 0 < p <= 100 for p in fracs):
+        raise ValueError(f"fracs must be integer percents in (0, 100]: {fracs}")
+    if len(set(fracs)) != len(fracs):
+        raise ValueError(f"fracs must be distinct: {fracs}")
+    return [int(p) for p in fracs]
+
+
 def line_interpolate(segments: DataFrame, fracs: tuple[int, ...]) -> DataFrame:
     """Locate the point at ``pct``% of each road's length, for each pct
     in ``fracs`` (integer percents — exactness by construction).
@@ -708,10 +721,7 @@ def line_interpolate(segments: DataFrame, fracs: tuple[int, ...]) -> DataFrame:
 
     Output: (road_id, pct, x_u, y_u), one row per road x fraction.
     """
-    if not fracs or any(not 0 < int(p) <= 100 for p in fracs):
-        raise ValueError(f"fracs must be integer percents in (0, 100]: {fracs}")
-    if len(set(int(p) for p in fracs)) != len(fracs):
-        raise ValueError(f"fracs must be distinct: {fracs}")
+    pcts = ", ".join(str(p) for p in _percents(fracs))
     segs = segments.selectExpr(
         "road_id", "seg_id", "ax", "ay", "bx", "by",
         f"{seg_len_u_sql()} AS len_u",
@@ -727,7 +737,6 @@ def line_interpolate(segments: DataFrame, fracs: tuple[int, ...]) -> DataFrame:
         .withColumn("cum0", F.col("cum_end") - F.col("len_u"))
         .withColumn("total_u", F.sum("len_u").over(wt))
     )
-    pcts = ", ".join(str(int(p)) for p in fracs)
     exploded = cum.selectExpr(
         "*", f"explode(array({pcts})) AS pct"
     ).selectExpr(
@@ -754,11 +763,7 @@ def line_interpolate_oracle_sql(segment_values_sql: str,
     """DuckDB twin: identical length/target/interpolation text over the
     VALUES segment table; the window sums run over BIGINTs so engine
     window-evaluation order cannot matter."""
-    if not fracs or any(not 0 < int(p) <= 100 for p in fracs):
-        raise ValueError(f"fracs must be integer percents in (0, 100]: {fracs}")
-    if len(set(int(p) for p in fracs)) != len(fracs):
-        raise ValueError(f"fracs must be distinct: {fracs}")
-    pcts = ", ".join(f"({int(p)})" for p in fracs)
+    pcts = ", ".join(f"({p})" for p in _percents(fracs))
     return f"""
         WITH segs AS MATERIALIZED (
           SELECT road_id, seg_id, ax, ay, bx, by, {seg_len_u_sql()} AS len_u

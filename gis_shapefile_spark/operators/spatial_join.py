@@ -10,35 +10,41 @@ Re-expresses the reference's R-tree query paths as Catalyst-planned joins
 
 Scale design (10^12-point table, dimension-scale polygon side):
 
-* The point side is NEVER exploded, NEVER touches Python except the PIP
-  refine on boundary-cell candidates; its cell key is a pure integer
-  expression inside whole-stage codegen.
+* The point side is NEVER exploded and NEVER touches Python: its cell key
+  is a pure integer expression inside whole-stage codegen, and the point
+  table is scanned once per join.
 * All covering/cell enumeration happens on the polygon side (driver numpy —
   thousands of rows), which then broadcasts. When the dimension outgrows
   broadcast, ``salt_buckets > 0`` replicates dimension rows per salt bucket
   and keys points by ``pmod(xxhash64(point_id), S)`` so one hot urban cell
   spreads over S shuffle partitions (AQE skew-join is the backstop).
 * Cells fully interior to a polygon are classified FULL at prep time: points
-  landing there match with no exact test. Only boundary (PARTIAL) cells pay
-  the vectorized ray-cast, and polygon rings travel once per executor via a
-  Spark broadcast variable — not once per candidate row.
+  landing there match with no exact test. Each boundary (PARTIAL) row
+  carries only the ring edges a +x ray from inside its cell can cross
+  (Raptor's scan band), and the join keeps a candidate with one JVM
+  predicate: ``is_full OR (odd shell crossings AND no hole with odd
+  crossings)`` — the geometry.cpp:82-119 ray cast, bit for bit.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions import cells as C
 from ..functions import geometry as G
 
 DEFAULT_RES = 8
+_DMAT_BUDGET = 1 << 22  # ~4M elements (32 MB of doubles) per driver matrix block
+
+# internal names of the dimension's refine columns, so no point column
+# (``is_full``, ``rings``, ...) can collide with them in the join
+_FULL = "__pip_full"
+_EDGES = "__pip_edges"
 
 
 # ---------------------------------------------------------------------------
@@ -55,67 +61,122 @@ def _rings_of_row(row) -> tuple[list[np.ndarray], list[np.ndarray]]:
     return rx, ry
 
 
+def _offsets(counts: np.ndarray) -> pa.Array:
+    return pa.array(np.concatenate([[0], np.cumsum(counts)]), pa.int32())
+
+
+def _edge_lists(
+    n_rows: int, is_full: np.ndarray, row: np.ndarray, ring: np.ndarray,
+    edges: list[np.ndarray],
+) -> pa.StructArray:
+    """The nested ``{shell: [edge], holes: [[edge]]}`` column, built from
+    offsets. ``(row, ring, edges)`` list every kept edge, sorted by row and
+    then by edge position (so ring by ring); FULL rows are null."""
+    def edge_array(m):
+        return pa.StructArray.from_arrays([e[m] for e in edges], ["x1", "y1", "x2", "y2"])
+
+    shell = ring == 0
+    hrow, hring = row[~shell], ring[~shell]
+    first = np.ones(len(hrow), bool)
+    first[1:] = (hrow[1:] != hrow[:-1]) | (hring[1:] != hring[:-1])
+    hole_rings = pa.ListArray.from_arrays(
+        pa.array(np.append(np.flatnonzero(first), len(hrow)), pa.int32()),
+        edge_array(~shell),
+    )
+    return pa.StructArray.from_arrays(
+        [pa.ListArray.from_arrays(
+            _offsets(np.bincount(row[shell], minlength=n_rows)), edge_array(shell)),
+         pa.ListArray.from_arrays(
+            _offsets(np.bincount(hrow[first], minlength=n_rows)), hole_rings)],
+        names=["shell", "holes"],
+        mask=pa.array(is_full),
+    )
+
+
 def prepare_polygon_cells(
     features_pdf: pd.DataFrame, res: int = DEFAULT_RES
 ) -> pd.DataFrame:
     """Explode each polygon into covering cells at ``res`` with a FULL flag.
 
-    Returns a pandas frame ``(cell, record_number, is_full)`` — the join
-    dimension. Covering = every cell whose extent intersects the polygon
-    bbox AND (corner-inside OR edge-crossing OR full) — cells disjoint from
-    the polygon are pruned so the dimension stays tight.
+    Returns a pandas frame ``(cell, record_number, is_full, __pip_edges)``
+    — the join dimension. Covering = every cell whose extent intersects
+    the polygon bbox AND (corner-inside OR edge-crossing OR full) — cells
+    disjoint from the polygon are pruned so the dimension stays tight.
+
+    ``__pip_edges`` (Arrow-backed; null on FULL rows) holds, ring by ring,
+    the edges a +x ray from a point keyed to the cell can cross: not
+    horizontal, y-span meeting the cell's row band and max x at least the
+    cell's min x. The band is padded by 1e-9 degrees, far above the
+    rounding of the cell key, and is open-ended on border cells, which
+    also hold the points clipped in from beyond the world. Edges keep the
+    kernel's orientation, ``(x1, y1)`` = vertex i and ``(x2, y2)`` = vertex
+    i-1, because swapping the ends changes how ``xint`` rounds.
+
+    Driver memory is bounded: the corner and ``(cells x edges)`` matrices
+    are built over chunks of at most ``_DMAT_BUDGET`` elements.
     """
-    out_cells, out_recs, out_fulls = [], [], []
+    pad = 1e-9
+    # per chunk: (cell, record_number, is_full) of the kept rows, and
+    # (row, ring, x1, y1, x2, y2) of every edge the PARTIAL rows keep
+    rows = [(np.empty(0, np.int64),) * 2 + (np.empty(0, bool),)]
+    kept = [(np.empty(0, np.int64),) * 2 + (np.empty(0),) * 4]
+    n_rows = 0
     for _, row in features_pdf.iterrows():
         if row["shape_type"] != 5 or len(row["ring_sizes"]) == 0:
             continue
+        rec = int(row["record_number"])
         rx, ry = _rings_of_row(row)
+        x1, y1 = np.concatenate(rx), np.concatenate(ry)
+        x2 = np.concatenate([np.roll(x, 1) for x in rx])
+        y2 = np.concatenate([np.roll(y, 1) for y in ry])
+        ring = np.repeat(np.arange(len(rx)), [len(x) for x in rx])
+        ex0, ex1 = np.minimum(x1, x2), np.maximum(x1, x2)
+        ey0, ey1 = np.minimum(y1, y2), np.maximum(y1, y2)
+        slanted = y1 != y2
+
         cover = C.cover_bbox(row["minx"], row["miny"], row["maxx"], row["maxy"], res)
-        x0, y0, x1, y1 = C.cell_bounds(cover)
-        n_cells = len(cover)
+        x0c, y0c, x1c, y1c = C.cell_bounds(cover)  # exact: the world edges are ±180/±90
+        bx0 = np.where(x0c == -180.0, -np.inf, x0c - pad)
+        by0 = np.where(y0c == -90.0, -np.inf, y0c - pad)
+        by1 = np.where(y1c == 90.0, np.inf, y1c + pad)
 
-        # all 4 corners of all cells in one vectorized PIP call
-        cx = np.concatenate([x0, x1, x1, x0])
-        cy = np.concatenate([y0, y0, y1, y1])
-        corner_in = G.polygon_contains_points(rx, ry, cx, cy).reshape(4, n_cells)
-        all_in = corner_in.all(axis=0)
-        any_in = corner_in.any(axis=0)
+        chunk = max(1, _DMAT_BUDGET // (4 * len(x1)))
+        for lo in range(0, len(cover), chunk):
+            c = slice(lo, lo + chunk)
+            # all 4 corners of the chunk's cells in one vectorized PIP call
+            corner_in = G.polygon_contains_points(
+                rx, ry, np.concatenate([x0c[c], x1c[c], x1c[c], x0c[c]]),
+                np.concatenate([y0c[c], y0c[c], y1c[c], y1c[c]]),
+            ).reshape(4, -1)
+            # (cells x edges) bbox overlap: does any ring edge cross the cell?
+            edge_hit = (
+                (ex0 <= x1c[c, None]) & (ex1 >= x0c[c, None])
+                & (ey0 <= y1c[c, None]) & (ey1 >= y0c[c, None])
+            ).any(axis=1)
+            full = corner_in.all(axis=0) & ~edge_hit
+            keep = full | corner_in.any(axis=0) | edge_hit
+            part = np.flatnonzero(keep & ~full)
+            p = part + lo
+            at, e = np.nonzero(
+                slanted & (ey1 >= by0[p, None]) & (ey0 <= by1[p, None])
+                & (ex1 >= bx0[p, None])
+            )
+            n_keep = int(keep.sum())
+            rows.append((cover[c][keep], np.full(n_keep, rec, np.int64), full[keep]))
+            # np.cumsum(keep) - 1: the row of each PARTIAL cell among the kept
+            kept.append((n_rows + np.cumsum(keep)[part][at] - 1, ring[e],
+                         x1[e], y1[e], x2[e], y2[e]))
+            n_rows += n_keep
 
-        # (edges x cells) bbox-overlap: does any ring edge cross each cell?
-        ex0 = np.concatenate([np.minimum(x, np.roll(x, 1)) for x in rx])
-        ex1 = np.concatenate([np.maximum(x, np.roll(x, 1)) for x in rx])
-        ey0 = np.concatenate([np.minimum(y, np.roll(y, 1)) for y in ry])
-        ey1 = np.concatenate([np.maximum(y, np.roll(y, 1)) for y in ry])
-        edge_hit = (
-            (ex0[:, None] <= x1[None, :])
-            & (ex1[:, None] >= x0[None, :])
-            & (ey0[:, None] <= y1[None, :])
-            & (ey1[:, None] >= y0[None, :])
-        ).any(axis=0)
-
-        full = all_in & ~edge_hit
-        keep = full | any_in | edge_hit
-        out_cells.append(cover[keep])
-        out_recs.append(np.full(int(keep.sum()), int(row["record_number"]), np.int64))
-        out_fulls.append(full[keep])
-    if not out_cells:
-        return pd.DataFrame({"cell": [], "record_number": [], "is_full": []}).astype(
-            {"cell": np.int64, "record_number": np.int64, "is_full": bool}
-        )
-    return pd.DataFrame(
-        {"cell": np.concatenate(out_cells),
-         "record_number": np.concatenate(out_recs),
-         "is_full": np.concatenate(out_fulls)}
-    )
-
-
-def rings_broadcast(spark: SparkSession, features_pdf: pd.DataFrame):
-    """Broadcast {record_number: (ring_xs, ring_ys)} once per executor."""
-    lookup = {}
-    for _, row in features_pdf.iterrows():
-        if row["shape_type"] == 5 and len(row["ring_sizes"]) > 0:
-            lookup[int(row["record_number"])] = _rings_of_row(row)
-    return spark.sparkContext.broadcast(lookup)
+    cell, rec, is_full = (np.concatenate(a) for a in zip(*rows))
+    row_of, ring_of, *edges = (np.concatenate(a) for a in zip(*kept))
+    return pd.DataFrame({
+        "cell": cell,
+        "record_number": rec,
+        "is_full": is_full,
+        _EDGES: pd.arrays.ArrowExtensionArray(
+            _edge_lists(n_rows, is_full, row_of, ring_of, edges)),
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -125,12 +186,12 @@ def rings_broadcast(spark: SparkSession, features_pdf: pd.DataFrame):
 class PolygonIndex:
     """The engine's replacement for the reference's R-tree build
     (spatial_index.cpp:295-306): a one-time materialization of the
-    covering-cell dimension (Spark DataFrame, broadcastable) plus the
-    ring-array broadcast used by the exact refine kernel.
+    covering-cell dimension (Spark DataFrame, broadcastable) whose PARTIAL
+    rows carry the ring edges the exact refine needs.
 
     Build once, join any number of point batches against it — at
     10^12-point scale the index build cost (dimension-scale) is noise and
-    every join pays only the broadcast-hash-join + refine.
+    every join pays only the broadcast hash join with its JVM refine.
     """
 
     def __init__(self, spark: SparkSession, features_pdf: pd.DataFrame, res: int):
@@ -138,8 +199,10 @@ class PolygonIndex:
         self.features_pdf = features_pdf
         self.res = res
         self.cells_pdf = prepare_polygon_cells(features_pdf, res)
-        self.dim = spark.createDataFrame(self.cells_pdf)
-        self.rings_bc = rings_broadcast(spark, features_pdf)
+        self.dim = spark.createDataFrame(
+            pa.Table.from_pandas(self.cells_pdf, preserve_index=False)
+            .rename_columns(["cell", "record_number", _FULL, _EDGES])
+        )
 
 
 def auto_salt_buckets(
@@ -202,9 +265,10 @@ def point_in_polygon_join(
 ) -> DataFrame:
     """Inner-join points to the polygons that exactly contain them.
 
-    Plan: cell equi-join (broadcast, or salted shuffle when requested) →
-    FULL cells pass through → PARTIAL cells refine with the vectorized
-    ray-cast (geometry.cpp:82-119 semantics) → deterministic tie-break
+    Plan: one scan of the points → cell equi-join (broadcast, or salted
+    shuffle when requested) whose JVM predicate passes FULL cells and
+    ray-casts PARTIAL ones over their cell's edges (geometry.cpp:82-119,
+    bit for bit; no Python) → deterministic tie-break
     ``min(record_number)`` when ``dedup_first`` (the engine's defensible
     replacement for the reference's traversal-order-dependent first hit,
     spatial_index.cpp:367-375).
@@ -245,7 +309,6 @@ def point_in_polygon_join(
             raise ValueError("res conflicts with the prebuilt PolygonIndex")
     else:
         index = PolygonIndex(spark, features_pdf, res)
-    cells_pdf = index.cells_pdf
     pts = points.withColumn("__cell", C.cell_col(lng_col, lat_col, index.res))
 
     if salt_buckets > 0:
@@ -253,11 +316,7 @@ def point_in_polygon_join(
         # dimension replicates per salt bucket (dim-scale cost), points key
         # by (cell, hash(point_id) % S) so a hot cell spreads S-ways.
         s = salt_buckets
-        salted = pd.concat(
-            [cells_pdf.assign(salt=np.int32(i)) for i in range(s)],
-            ignore_index=True,
-        )
-        dim = spark.createDataFrame(salted)
+        dim = index.dim.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1))))
         pts = pts.withColumn(
             "__psalt", F.pmod(F.xxhash64(F.col(point_id_col)), F.lit(s)).cast("int")
         )
@@ -265,8 +324,8 @@ def point_in_polygon_join(
             dim.hint("shuffle_hash"),
             (pts["__cell"] == dim["cell"]) & (pts["__psalt"] == dim["salt"]),
             "inner",
-        ).drop("cell", "salt", "__psalt")
-        matched = _split_refine(joined, index.rings_bc, lng_col, lat_col)
+        ).drop("salt", "__psalt")
+        matched = _refine(joined, lng_col, lat_col)
     else:
         matched = pip_matches_stateless(points, index, lng_col, lat_col)
 
@@ -288,12 +347,26 @@ def point_in_polygon_join(
     return matched
 
 
-def _split_refine(joined: DataFrame, rings_bc, lng_col: str, lat_col: str) -> DataFrame:
-    """FULL cells pass through; PARTIAL cells pay the vectorized ray-cast."""
-    full = joined.where(F.col("is_full")).drop("is_full", "__cell")
-    partial = joined.where(~F.col("is_full")).drop("is_full", "__cell")
-    refined = _pip_refine_bc(partial, rings_bc, lng_col, lat_col)
-    return full.unionByName(refined)
+def _crossings(edges: Column, lng: Column, lat: Column) -> Column:
+    """How many of ``edges`` a +x ray from (lng, lat) crosses: the test of
+    ``geometry._ring_crossings`` with the same expression tree, so the JVM
+    rounds ``xint`` exactly as numpy does. No edge is horizontal, so the
+    division never meets the zero that ANSI mode raises on."""
+    return F.size(F.filter(edges, lambda e: ((e.y1 > lat) != (e.y2 > lat))
+                           & (lng < (e.x2 - e.x1) * (lat - e.y1) / (e.y2 - e.y1) + e.x1)))
+
+
+def _refine(joined: DataFrame, lng_col: str, lat_col: str) -> DataFrame:
+    """FULL cells pass; PARTIAL cells keep the point when its ray crosses
+    the shell an odd number of times and no hole an odd number of times.
+    Ring roles are positional (geometry.cpp:106-118): every ring after the
+    first, a multipart polygon's second shell included, counts as a hole,
+    so each ring keeps its own parity."""
+    lng, lat = F.col(lng_col), F.col(lat_col)
+    edges = F.col(_EDGES)
+    inside = (_crossings(edges["shell"], lng, lat) % 2 == 1) & ~F.exists(
+        edges["holes"], lambda h: _crossings(h, lng, lat) % 2 == 1)
+    return joined.where(F.col(_FULL) | inside).drop("cell", "__cell", _FULL, _EDGES)
 
 
 def pip_matches_stateless(
@@ -308,43 +381,8 @@ def pip_matches_stateless(
     runs unchanged on a streaming DataFrame in append mode."""
     pts = points.withColumn("__cell", C.cell_col(lng_col, lat_col, index.res))
     dim = index.dim
-    joined = pts.join(
-        F.broadcast(dim), pts["__cell"] == dim["cell"], "inner"
-    ).drop("cell")
-    return _split_refine(joined, index.rings_bc, lng_col, lat_col)
-
-
-def _pip_refine_bc(
-    candidates: DataFrame,
-    bc,
-    lng_col: str,
-    lat_col: str,
-) -> DataFrame:
-    """Exact ray-cast refine over (point, record_number) candidate rows.
-
-    ``mapInPandas`` + broadcast ring lookup: Arrow batches in, vectorized
-    numpy per polygon-group, no per-row Python.
-    """
-    schema = candidates.schema
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lookup = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            recs = pdf["record_number"].to_numpy()
-            px = pdf[lng_col].to_numpy(np.float64)
-            py = pdf[lat_col].to_numpy(np.float64)
-            for rec in np.unique(recs):
-                rings = lookup.get(int(rec))
-                if rings is None:
-                    continue
-                m = recs == rec
-                keep[m] = G.polygon_contains_points(rings[0], rings[1], px[m], py[m])
-            yield pdf[keep]
-
-    return candidates.mapInPandas(refine, schema=schema)
+    joined = pts.join(F.broadcast(dim), pts["__cell"] == dim["cell"], "inner")
+    return _refine(joined, lng_col, lat_col)
 
 
 # ---------------------------------------------------------------------------
@@ -456,7 +494,6 @@ def knn_join_bruteforce(
 
 
 MAX_OCCUPIED_CELLS = 65536  # driver candidate-table budget (see _occupied_cells_bounded)
-_DMAT_BUDGET = 1 << 22  # ~4M doubles (32 MB) per (cells-chunk x features) block
 
 
 def _occupied_cells_bounded(

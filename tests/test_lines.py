@@ -598,3 +598,17 @@ def test_line_interpolate_rejects_bad_fracs(spark):
         LN.line_interpolate(None, fracs=(0,))
     with _pytest.raises(ValueError):
         LN.line_interpolate_oracle_sql("s", fracs=(101,))
+
+
+@pytest.mark.parametrize("fracs", [(50.5,), (25, 50.5), (50.0,), (np.float64(75.0),)])
+def test_line_interpolate_rejects_float_fracs(fracs):
+    """A float percent is rejected, never truncated (50.5 used to become 50)."""
+    with pytest.raises(ValueError):
+        LN.line_interpolate(None, fracs=fracs)
+    with pytest.raises(ValueError):
+        LN.line_interpolate_oracle_sql("s", fracs=fracs)
+
+
+def test_line_interpolate_accepts_numpy_integer_fracs():
+    assert "(25), (50)" in LN.line_interpolate_oracle_sql(
+        "s", fracs=(np.int64(25), np.int32(50)))

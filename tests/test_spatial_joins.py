@@ -588,3 +588,209 @@ def test_pip_anti_join_is_exact_complement(spark, features, points_pdf):
     all_ids = set(points_pdf["image_id"])
     assert anti_ids == all_ids - oracle_in
     assert anti_ids and oracle_in  # both sides non-trivial on the fixture
+
+
+# --- exactness of the JVM ray-cast refine -----------------------------------
+
+_QX, _QY = 360.0 / 2 ** 12, 180.0 / 2 ** 12  # snap grid: every cell edge at res <= 12
+
+
+def _feature(rec, rings):
+    xs = np.concatenate([r[0] for r in rings])
+    ys = np.concatenate([r[1] for r in rings])
+    return {"record_number": rec, "shape_type": 5, "xs": list(xs), "ys": list(ys),
+            "ring_sizes": [len(r[0]) for r in rings], "minx": xs.min(),
+            "miny": ys.min(), "maxx": xs.max(), "maxy": ys.max()}
+
+
+def _star(rng, cx, cy, r, n):
+    """A snapped star ring: vertices on the cell grid, some of its edges
+    exactly horizontal, and one vertex repeated."""
+    ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+    rad = r * rng.uniform(0.5, 1.0, n)
+    x = np.round((cx + rad * np.cos(ang)) / _QX) * _QX
+    y = np.round((cy + rad * np.sin(ang)) / _QY) * _QY
+    y[1::5] = y[0::5][: len(y[1::5])]  # horizontal edges
+    x = np.insert(x, 3, x[3])  # a repeated vertex (zero-length edge)
+    y = np.insert(y, 3, y[3])
+    return x, y
+
+
+def _box(x0, y0, x1, y1):
+    return np.array([x0, x1, x1, x0]), np.array([y0, y0, y1, y1])
+
+
+def _random_features(seed):
+    """Holes, a multipart polygon whose second shell counts as a hole,
+    overlaps for the tie-break, a grid-aligned box with two overlapping box
+    holes (a point in both is outside: each hole has its own parity), and
+    a wide polygon nudged off the grid, whose long edges make ``xint``
+    round differently when the edge ends are swapped."""
+    rng = np.random.default_rng(seed)
+    feats = [
+        _feature(1, [_star(rng, -100, 40, 3.0, 40), _star(rng, -100, 40, 1.2, 14)]),
+        _feature(2, [_star(rng, -92, 40, 2.0, 30), _star(rng, -88, 37, 1.5, 20)]),
+        _feature(3, [_star(rng, -98, 41, 2.5, 50)]),
+    ]
+    wx, wy = _star(rng, -100, 40, 16.0, 6)
+    return pd.DataFrame(feats + [
+        _feature(4, [_box(-96.0, 34.453125, -90.0, 38.3203125),
+                     _box(-94.21875, 35.15625, -92.8125, 36.5625),
+                     _box(-93.515625, 35.859375, -91.40625, 37.265625)]),
+        _feature(5, [(wx + 0.01, wy + 0.003)]),
+    ])
+
+
+def _on_edges(feats, rng):
+    """Points on every slanted edge at random fractions (at least two per
+    edge, sixteen per degree of length), x computed by the kernel's own
+    expression: they lie exactly on the edge, where the rounding of
+    ``xint`` decides the crossing. On long edges, swapping the edge ends
+    flips about 1% of these answers."""
+    ex, ey = [], []
+    for _, r in feats.iterrows():
+        for x1, y1 in zip(*_rings(r)):
+            x2, y2 = np.roll(x1, 1), np.roll(y1, 1)
+            per = 2 + (16 * np.hypot(x2 - x1, y2 - y1)).astype(int)
+            s = np.repeat(np.arange(len(x1)), per)
+            s = s[y1[s] != y2[s]]
+            x1, y1, x2, y2 = x1[s], y1[s], x2[s], y2[s]
+            lat = y1 + rng.uniform(0, 1, len(y1)) * (y2 - y1)
+            ex.append((x2 - x1) * (lat - y1) / (y2 - y1) + x1)
+            ey.append(lat)
+    return np.concatenate(ex), np.concatenate(ey)
+
+
+def _probe_points(feats, res, seed):
+    """Vertices, points on edges, points on cell boundaries and on the
+    y of every vertex, plus uniform points over the features' extent."""
+    rng = np.random.default_rng(seed)
+    vx = np.concatenate([np.asarray(v) for v in feats["xs"]])
+    vy = np.concatenate([np.asarray(v) for v in feats["ys"]])
+    mx, my = _on_edges(feats, rng)
+    x0, x1 = feats["minx"].min() - 1, feats["maxx"].max() + 1
+    y0, y1 = feats["miny"].min() - 1, feats["maxy"].max() + 1
+    w, h = 360.0 / 2 ** res, 180.0 / 2 ** res
+    gx = np.arange(np.ceil((x0 + 180) / w), (x1 + 180) / w) * w - 180  # cell columns
+    gy = np.arange(np.ceil((y0 + 90) / h), (y1 + 90) / h) * h - 90  # cell rows
+    n = 300
+    # vertices, on-edge points, cell columns, cell rows, vertex latitudes,
+    # cell corners, uniform
+    lng = np.concatenate([vx, mx, rng.choice(gx, n), rng.uniform(x0, x1, n),
+                          rng.uniform(x0, x1, n), rng.choice(gx, 50),
+                          rng.uniform(x0, x1, 2 * n)])
+    lat = np.concatenate([vy, my, rng.uniform(y0, y1, n), rng.choice(gy, n),
+                          rng.choice(vy, n), rng.choice(gy, 50),
+                          rng.uniform(y0, y1, 2 * n)])
+    return pd.DataFrame({"pid": np.arange(len(lng)), "lng": lng, "lat": lat})
+
+
+def _numpy_pairs(feats, pdf):
+    pairs = set()
+    for _, r in feats.iterrows():
+        rxs, rys = _rings(r)
+        hit = G.polygon_contains_points(rxs, rys, pdf["lng"], pdf["lat"])
+        pairs |= {(int(p), int(r["record_number"])) for p in pdf["pid"][hit]}
+    return pairs
+
+
+@pytest.fixture
+def ansi(spark):
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    yield
+    spark.conf.set("spark.sql.ansi.enabled", old)
+
+
+@pytest.mark.parametrize("res", [6, 8, 10])
+def test_pip_refine_equals_numpy_kernel(spark, ansi, res):
+    """Broadcast, salted and stateless joins equal
+    ``polygon_contains_points`` exactly, under ANSI mode, on points that
+    sit on vertices, on edges and on cell boundaries."""
+    feats = _random_features(res)
+    pdf = _probe_points(feats, res, res)
+    want = _numpy_pairs(feats, pdf)
+    first = {}
+    for p, rec in sorted(want):
+        first.setdefault(p, rec)
+    assert 0 < len(first) < len(pdf) and len(want) > len(first)  # overlaps exist
+
+    index = SJ.PolygonIndex(spark, feats, res)
+    partial = index.cells_pdf[~index.cells_pdf["is_full"]]
+    assert any(e["holes"] for e in partial[SJ._EDGES])  # the hole parity runs
+    pts = spark.createDataFrame(pdf)
+    got = {(r.pid, r.record_number)
+           for r in SJ.pip_matches_stateless(pts, index).collect()}
+    assert got == want
+    for salt in (0, 3):
+        for dedup in (False, True):
+            out = SJ.point_in_polygon_join(spark, pts, index, res=res, point_id_col="pid",
+                                           salt_buckets=salt, dedup_first=dedup)
+            got = {(r.pid, r.record_number) for r in out.collect()}
+            assert got == (set(first.items()) if dedup else want), (salt, dedup)
+
+
+def _many_vertex_feature():
+    """One polygon with 24k shell vertices and a 3k-vertex hole."""
+    rng = np.random.default_rng(11)
+
+    def ring(r, n, sign):
+        ang = sign * np.linspace(0, 2 * np.pi, n, endpoint=False)
+        rad = r * (1 + 0.05 * rng.standard_normal(n))
+        return -100 + rad * np.cos(ang), 40 + rad * np.sin(ang)
+
+    return pd.DataFrame([_feature(1, [ring(3.0, 24_000, 1), ring(1.0, 3_000, -1)])])
+
+
+def test_prepare_polygon_cells_chunked_equals_unchunked(spark, monkeypatch):
+    feats = _many_vertex_feature()
+    chunked = SJ.prepare_polygon_cells(feats, 8)  # ~150 cells per chunk
+    monkeypatch.setattr(SJ, "_DMAT_BUDGET", 1)  # one cell per chunk
+    tiny = SJ.prepare_polygon_cells(feats, 8)
+    monkeypatch.setattr(SJ, "_DMAT_BUDGET", 1 << 40)  # a single chunk
+    whole = SJ.prepare_polygon_cells(feats, 8)
+    for d in (chunked, tiny):
+        pd.testing.assert_frame_equal(d, whole)
+    assert whole["is_full"].any() and (~whole["is_full"]).any()
+
+    index = SJ.PolygonIndex(spark, feats, 8)
+    rng = np.random.default_rng(3)
+    n = 4000
+    pdf = pd.DataFrame({"pid": np.arange(n), "lng": rng.uniform(-104, -96, n),
+                        "lat": rng.uniform(36, 44, n)})
+    got = {(r.pid, r.record_number) for r in
+           SJ.pip_matches_stateless(spark.createDataFrame(pdf), index).collect()}
+    want = _numpy_pairs(feats, pdf)
+    assert got == want and len(want) > n // 4
+
+
+def test_pip_joins_scan_points_once_without_python(spark, features, points_pdf, tmp_path):
+    """Plan pin: one points scan and no Python node in the broadcast join,
+    the salted join and the stateless core."""
+    from plan_walk import PYTHON_NODES, plan_node_names
+
+    path = str(tmp_path / "points")
+    spark.createDataFrame(points_pdf).write.parquet(path)
+    pts = spark.read.parquet(path)
+    index = SJ.PolygonIndex(spark, features, 8)
+    plans = {
+        "broadcast": SJ.point_in_polygon_join(spark, pts, index, res=8),
+        "salted": SJ.point_in_polygon_join(spark, pts, index, res=8, salt_buckets=4),
+        "stateless": SJ.pip_matches_stateless(pts, index),
+    }
+    for name, df in plans.items():
+        assert df.collect()
+        nodes = plan_node_names(df)
+        assert nodes.count("FileSourceScanExec") == 1, (name, nodes)
+        assert not set(nodes) & set(PYTHON_NODES), (name, nodes)
+
+
+def test_pip_join_keeps_point_columns_named_like_the_dimension(spark, features, points_pdf):
+    """A point column called ``is_full`` or ``rings`` neither collides with
+    the dimension's refine columns nor changes the matches."""
+    pdf = points_pdf.assign(is_full=7, rings="r")
+    got = SJ.point_in_polygon_join(spark, spark.createDataFrame(pdf), features, res=8)
+    assert got.columns == list(pdf.columns) + ["record_number"]
+    rows = got.collect()
+    assert {(r.image_id, r.record_number) for r in rows} == oracle_pip_pairs(features, points_pdf)
+    assert {(r.is_full, r.rings) for r in rows} == {(7, "r")}
